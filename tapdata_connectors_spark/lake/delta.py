@@ -67,7 +67,6 @@ def append_delta(
     cols_map: dict[str, str] = {
         "key": m.key, "op": "_final_op", "seq": "_final_seq", "ord_ts": "_final_ts",
     }
-    types_map: dict[str, str] = {}
     # 'DU' (delete followed only by updates) normalizes to a DELETE at the
     # delete's order under the default policy (the post-delete updates hit a
     # missing row and drop — see operators/dedup.py); MOR mode asserts the
@@ -84,7 +83,6 @@ def append_delta(
         fid = str(ids[c.name])
         cols_map[fid] = c.name
         cols_map[f"s{fid}"] = f"__set_{c.name}"
-        types_map[fid] = c.type
         sel.append(F.col(c.name))
         sel.append(F.col(f"__set_{c.name}"))
     payload_names = {c.name for c in payload}
@@ -93,7 +91,6 @@ def append_delta(
         fid = str(ids[out])
         cols_map[fid] = out
         cols_map[f"s{fid}"] = f"__set_{out}"
-        types_map[fid] = "string"
         if src in payload_names:
             # derived value exists exactly when its source was set (unset
             # source -> resolve keeps the base row's derived value); UDF
@@ -116,9 +113,7 @@ def append_delta(
     # parquet footers (lake/stats.py) — rows feed per-partition lineage,
     # bounds feed read-side file skipping. Local-FS metadata reads only;
     # on remote lakes lineage reports global counts from observe() instead.
-    entries = table.write_data_files(
-        delta, "_mb", kind="delta", columns=cols_map, types=types_map
-    )
+    entries = table.write_data_files(delta, "_mb", kind="delta", columns=cols_map)
     version = table.commit_files(
         entries,
         replaced_buckets=None,

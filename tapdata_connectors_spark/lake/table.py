@@ -115,7 +115,9 @@ class Manifest:
     fields: list[Field]
     key: str
     n_buckets: int
-    files: list[dict]  # {path, bucket, columns: {id->phys name}, types: {id->phys type}}
+    # {path, bucket, columns: {id->phys name}, types: {id->phys type},
+    #  types_written: True when `types` are the written types}
+    files: list[dict]
     applied_epochs: dict[str, str] = field(default_factory=dict)
     next_field_id: int = 0
     summary: dict = field(default_factory=dict)
@@ -173,6 +175,18 @@ class CommitConflict(RuntimeError):
 # bytes), so a process-wide cache can never serve stale content; bounded
 # by periodic clear, see LakeTable._bucket_list
 _BUCKET_LIST_CACHE: dict[str, list] = {}
+
+
+def _layout_groups(files: list[dict]) -> list[list[dict]]:
+    """Data files grouped by identical physical layout (columns + types,
+    and whether those types are the written ones): each group is one
+    `LakeTable._scan`."""
+    groups: dict[str, list[dict]] = {}
+    for fi in files:
+        sig = json.dumps([fi["columns"], fi["types"], fi.get("types_written", False)],
+                         sort_keys=True)
+        groups.setdefault(sig, []).append(fi)
+    return list(groups.values())
 
 
 def _lock_for(path: str) -> threading.RLock:
@@ -693,7 +707,8 @@ class LakeTable:
 
         Base files are grouped by identical physical layout; each group is
         read in one `spark.read.parquet(*paths)` (so Spark still plans
-        splits, pushdown and pruning per group), mapped id->current name
+        splits, pushdown and pruning per group) with the physical schema
+        the manifest records (`_scan`), mapped id->current name
         with casts, then unioned by name. Missing columns (pre-ADD files)
         come back as typed nulls.
 
@@ -710,9 +725,8 @@ class LakeTable:
         if prune:
             files = self.prune_entries(m, files, prune)
 
-        empty = self.spark.createDataFrame([], self._raw_schema(m))
         if not files:
-            return empty
+            return self.spark.createDataFrame([], self._raw_schema(m))
 
         delta_buckets = {f["bucket"] for f in files if f.get("kind") == "delta"}
         plain = [f for f in files if f["bucket"] not in delta_buckets]
@@ -727,12 +741,28 @@ class LakeTable:
             parts.append(self._read_base(m, plain))
         if deltas:
             parts.append(self._resolve_deltas(m, base_in_delta, deltas))
-        if not parts:
-            return empty
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _scan(self, grp: list[dict]) -> DataFrame:
+        """Read one group of same-layout data files. Entries stamped
+        `types_written` record the physical type of every column they
+        hold (write_data_files), so the read passes that schema and Spark
+        skips the footer-inference job a schema-less `read.parquet`
+        launches. Older entries recorded the DECLARED types, which can
+        differ from the written ones (a derived column declared "string"
+        but written bigint); they keep the schema-less read."""
+        e = grp[0]
+        paths = [self._io.join(g["path"]) for g in grp]
+        if not e.get("types_written"):
+            return self.spark.read.parquet(*paths)
+        schema = T.StructType([
+            T.StructField(phys, type_of(e["types"][i]))
+            for i, phys in e["columns"].items()
+        ])
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _read_base(self, m: Manifest, files: list[dict]) -> DataFrame:
         logical = [(f.id, f.name, f.type) for f in m.fields]
@@ -740,15 +770,10 @@ class LakeTable:
         want = logical + hidden
         defaults = {f.id: f.default for f in m.fields if f.default is not None}
 
-        groups: dict[str, list[dict]] = {}
-        for fi in files:
-            sig = json.dumps([fi["columns"], fi["types"]], sort_keys=True)
-            groups.setdefault(sig, []).append(fi)
-
         parts: list[DataFrame] = []
-        for grp in groups.values():
+        for grp in _layout_groups(files):
             cols = {int(k): v for k, v in grp[0]["columns"].items()}
-            df = self.spark.read.parquet(*[self._io.join(g["path"]) for g in grp])
+            df = self._scan(grp)
             sel = []
             for fid, name, ty in want:
                 if fid in cols:
@@ -776,6 +801,7 @@ class LakeTable:
         from tapdata_connectors_spark.operators.mor import KIND, ORD, resolve_mor
 
         payload = [ColumnSpec(f.name, f.type) for f in m.fields if f.name != m.key]
+        defaults = {f.id: f.default for f in m.fields if f.default is not None}
 
         parts: list[DataFrame] = []
         if base_files:
@@ -792,13 +818,9 @@ class LakeTable:
             )
             parts.append(b.select(*sel))
 
-        groups: dict[str, list[dict]] = {}
-        for fi in delta_files:
-            sig = json.dumps([fi["columns"], fi["types"]], sort_keys=True)
-            groups.setdefault(sig, []).append(fi)
-        for grp in groups.values():
-            cols = {k: v for k, v in grp[0]["columns"].items()}
-            df = self.spark.read.parquet(*[self._io.join(g["path"]) for g in grp])
+        for grp in _layout_groups(delta_files):
+            cols = grp[0]["columns"]
+            df = self._scan(grp)
             sel = [F.col(cols["key"]).alias(m.key)]
             for f in m.fields:
                 if f.name == m.key:
@@ -807,6 +829,12 @@ class LakeTable:
                 if fid in cols:
                     sel.append(F.col(cols[fid]).cast(type_of(f.type)).alias(f.name))
                     sel.append(F.col(cols[f"s{fid}"]).alias(f"__set_{f.name}"))
+                elif f.id in defaults:
+                    # pre-ADD delta: the row reads the initial default, as a
+                    # pre-ADD base row does (_read_base) — a SET value, or a
+                    # key whose history is all pre-ADD deltas resolves null
+                    sel.append(F.lit(defaults[f.id]).cast(type_of(f.type)).alias(f.name))
+                    sel.append(F.lit(True).alias(f"__set_{f.name}"))
                 else:
                     sel.append(F.lit(None).cast(type_of(f.type)).alias(f.name))
                     sel.append(F.lit(False).alias(f"__set_{f.name}"))
@@ -1096,7 +1124,6 @@ class LakeTable:
         bucket_col: str,
         kind: str = "base",
         columns: dict[str, str] | None = None,
-        types: dict[str, str] | None = None,
         cluster_by: str | None = None,
         n_buckets: int | None = None,
     ) -> list[dict]:
@@ -1151,8 +1178,12 @@ class LakeTable:
         if columns is None:
             columns = {str(f.id): f.name for f in m.fields}
             columns.update({"-1": SEQ_COL, "-2": TOMBSTONE_COL})
-            types = {str(f.id): f.type for f in m.fields}
-            types.update({"-1": "bigint", "-2": "boolean"})
+        # record the type each column was actually WRITTEN with: _scan
+        # reads the file back with it (a frame's type can differ from the
+        # declared one: a union with a typed-null branch widens a derived
+        # column, a bootstrap frame brings its own types)
+        written = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        types = {i: written[phys] for i, phys in columns.items()}
         entries: list[dict] = []
         # FS-glob enumeration of exactly this commit's files — works on any
         # Hadoop filesystem (no POSIX listdir); one metadata round-trip
@@ -1166,6 +1197,7 @@ class LakeTable:
                 "bucket": int(bdir.split("=")[1]),
                 "columns": columns,
                 "types": types,
+                "types_written": True,
             }
             if kind != "base":
                 e["kind"] = kind

@@ -18,6 +18,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g: a fixed 16g heap on a smaller
+    host lets the JVM grow until the kernel OOM-kills it. Falls back to
+    the 16g cap where /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16 * 1024, kb // 2048))}m"
+
+
 def build_session(
     master: str | None = None,
     app_name: str = "tapdata_connectors_spark",
@@ -46,7 +58,8 @@ def build_session(
         # lake's manifest-bounds file skipping (lake/stats.py) on ts cols
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tapdata_connectors_spark.lake.merge import BROADCAST_KEY_BYTES
+from tapdata_connectors_spark.lake.table import _layout_groups
 from tapdata_connectors_spark.operators import corpus
 from tapdata_connectors_spark.schema import SEQ_COL, TOMBSTONE_COL
 
@@ -167,14 +168,10 @@ def _touched_keys(pipe, t, since_version: int,
             t._read_base(m, base_new)
             .select(F.col(key).alias("_k"), F.col(SEQ_COL).alias("_s"))
         )
-    groups: dict[str, list[dict]] = {}
-    for fi in delta_new:
-        sig = f'{fi["columns"]["key"]}|{fi["columns"]["seq"]}'
-        groups.setdefault(sig, []).append(fi)
-    for grp in groups.values():
+    for grp in _layout_groups(delta_new):
         c = grp[0]["columns"]
         parts.append(
-            pipe.spark.read.parquet(*[t._io.join(g["path"]) for g in grp])
+            t._scan(grp)
             .select(F.col(c["key"]).alias("_k"),
                     F.col(c["seq"]).cast("long").alias("_s"))
         )

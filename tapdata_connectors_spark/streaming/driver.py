@@ -24,14 +24,17 @@ Kill the job after epoch k, restart, and the final state is identical
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from tapdata_connectors_spark.functions.text_extract import extract_text_udf
+from tapdata_connectors_spark.lake.fs import make_fs
 from tapdata_connectors_spark.lake.merge import merge_into
 from tapdata_connectors_spark.lake.table import CommitConflict, LakeTable
 from tapdata_connectors_spark.operators.dedup import ColumnSpec, lww_fold
@@ -193,6 +196,7 @@ class CdcPipeline:
             len(PAGES_FIELDS) + 1 + i: name for i, name in enumerate(self.enrich)
         }
         self.table = LakeTable(spark, table_path)
+        self._lineage_io = make_fs(spark, self.lineage_path)
         self._lineage_rows: list[tuple] = []
         self._start_epoch: int | None = None
 
@@ -299,31 +303,70 @@ class CdcPipeline:
         passes the foreachBatch batch_id — Structured Streaming guarantees
         a retried batch_id carries identical data, which is exactly the
         redelivery the guard must neutralize, while a later batch with the
-        rest of the same epoch gets a fresh key and is applied."""
+        rest of the same epoch gets a fresh key and is applied.
+
+        Empty slices: the one aggregation that collects the DDL rows also
+        returns the lowest and highest DML seq. A slice's index is the
+        number of barriers strictly below the event's seq; an event whose
+        seq equals a barrier's belongs to no slice (the strict bounds of
+        _apply_dml_slice). A slice those bounds prove empty (it lies
+        outside the DML seq range, or sits between barriers at adjacent
+        seqs) returns {"skipped": True, "empty": True, "epoch_key": ...}
+        without building its fold and records no guard key. Any other
+        slice is folded; a fold that finds no event returns the same
+        entry. The returned list always has one entry per slice."""
         self.init_table()
         # the staging marker records whether this epoch carries DDL at all
         # (stage_events computes it once); a False hint skips a whole
         # scan-job per epoch on the hot path
-        ddl_rows = [] if has_ddl is False else (
-            events.filter(F.col("op") == "DDL")
-            .select("event_seq", "ddl.*")
-            .orderBy("event_seq")
-            .collect()
-        )
+        ddl_rows, dml_lo, dml_hi = [], None, None
+        if has_ddl is not False:
+            ddl_rows, dml_lo, dml_hi = self._barriers(events)
         # slice boundaries: (-inf, ddl1), [ddl1] , (ddl1, ddl2), ... (ddlN, +inf)
         metrics_all: list[dict] = []
         bounds = [r["event_seq"] for r in ddl_rows]
-        lo = None
         dml = events.filter(F.col("op") != "DDL")
-        for i, ddl in enumerate(ddl_rows):
-            hi = bounds[i]
-            metrics_all.append(self._apply_dml_slice(dml, epoch, i, lo, hi, key_prefix))
-            self._apply_ddl(ddl, epoch_key=f"e{epoch}:ddl{hi}")
+        lo = None
+        for i, hi in enumerate(bounds + [None]):
+            if has_ddl is False or self._may_hold_dml(lo, hi, dml_lo, dml_hi):
+                metrics_all.append(
+                    self._apply_dml_slice(dml, epoch, i, lo, hi, key_prefix)
+                )
+            else:
+                metrics_all.append({"skipped": True, "empty": True,
+                                    "epoch_key": f"{key_prefix}e{epoch}:s{i}"})
+            if hi is not None:
+                self._apply_ddl(ddl_rows[i], epoch_key=f"e{epoch}:ddl{hi}")
             lo = hi
-        metrics_all.append(
-            self._apply_dml_slice(dml, epoch, len(ddl_rows), lo, None, key_prefix)
-        )
         return metrics_all
+
+    @staticmethod
+    def _barriers(events: DataFrame) -> tuple[list, int | None, int | None]:
+        """ONE aggregation over the epoch: its DDL rows (event_seq plus
+        the ddl fields) in seq order, and the lowest and highest DML seq
+        (None when the epoch holds no DML event)."""
+        seq, is_ddl = F.col("event_seq"), F.col("op") == "DDL"
+        ddl = F.struct(seq, *[F.col(f"ddl.{n}").alias(n)
+                              for n in events.schema["ddl"].dataType.names])
+        row = events.agg(
+            F.collect_list(F.when(is_ddl, ddl)).alias("ddl"),
+            F.min(F.when(~is_ddl, seq)).alias("lo"),
+            F.max(F.when(~is_ddl, seq)).alias("hi"),
+        ).collect()[0]
+        return sorted(row["ddl"], key=lambda r: r["event_seq"]), row["lo"], row["hi"]
+
+    @staticmethod
+    def _may_hold_dml(lo, hi, dml_lo, dml_hi) -> bool:
+        """False when no DML seq can lie strictly inside (lo, hi): the
+        epoch has no DML, the slice is outside [dml_lo, dml_hi], or its
+        barriers sit at adjacent seqs."""
+        if dml_lo is None:
+            return False
+        if lo is not None and dml_hi <= lo:
+            return False
+        if hi is not None and dml_lo >= hi:
+            return False
+        return lo is None or hi is None or hi - lo > 1
 
     def apply_epoch_chunk(self, epochs: list[int]) -> list[dict]:
         """Apply a run of DDL-free epochs as ONE Spark job (MOR + default
@@ -561,6 +604,11 @@ class CdcPipeline:
             # obs.get would block forever — skip stats/lineage entirely
             wall_ms = int((time.time() - t0) * 1000)
             return {**m, "epoch_key": epoch_key, "n_events": 0, "wall_ms": wall_ms}
+        if obs._jo.getRow().schema() is None:
+            # no metrics row: Spark drops the CollectMetrics node of a plan
+            # it proves empty (an empty DDL-bounded slice), and obs.get
+            # cannot convert the empty row
+            return {"skipped": True, "empty": True, "epoch_key": epoch_key}
         stats = obs.get
         n_events = stats["n_events"]
         if n_events or stats["n_null_pk"]:
@@ -642,9 +690,9 @@ class CdcPipeline:
     def _buffer_lineage(self, epoch, slice_no, per_bucket, m, wall_ms) -> None:
         """Buffer lineage rows (epoch, slice, partition): offset range,
         event counts, merge stats — the north rule's per-partition lineage.
-        partition_id -1 = slice-global row; buffered rows flush in one
-        write at batch/replay end (a per-slice write job would serialize
-        the hot path)."""
+        partition_id -1 = slice-global row; buffered rows flush as one
+        file (flush_lineage) at batch/replay end on the MOR path and per
+        slice on the COW path."""
         by_bucket = m.get("by_bucket", {})
         for r in per_bucket:
             bb = by_bucket.get(r["_mb"], {})
@@ -656,19 +704,39 @@ class CdcPipeline:
             ))
 
     def flush_lineage(self) -> None:
+        """Publish the buffered lineage rows as ONE JSON-lines file under
+        `lineage_path` (`<ms>-<uuid>.jsonl`, one LINEAGE_SCHEMA object per
+        line), driver-side through lake/fs.py — no Spark job for a dozen
+        rows, and a remote lineage path works like a local one. The file
+        appears whole via create_exclusive (write-tmp-then-publish), so a
+        crash leaves no torn file for lineage() to read."""
         if not self._lineage_rows:
             return
         rows, self._lineage_rows = self._lineage_rows, []
-        (
-            self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.lineage_path)
-        )
+        names = LINEAGE_SCHEMA.fieldNames()
+        body = "".join(json.dumps(dict(zip(names, r))) + "\n" for r in rows)
+        name = f"{int(time.time() * 1000)}-{uuid.uuid4().hex}.jsonl"
+        self._lineage_io.create_exclusive(self._lineage_io.join(name), body)
 
     def lineage(self) -> DataFrame:
+        """Every flushed lineage row, read back with LINEAGE_SCHEMA given
+        explicitly (no inference job): the published `*.jsonl` files plus
+        any `*.parquet` files earlier versions flushed with a Spark write,
+        so a pipeline resumed on an older lineage directory keeps its old
+        rows. An empty frame before the first flush."""
         self.flush_lineage()
-        return self.spark.read.parquet(self.lineage_path)
+        io = self._lineage_io
+        reader = self.spark.read.schema(LINEAGE_SCHEMA)
+        parts = []
+        jsonl = io.glob_files(io.join("*.jsonl"))
+        if jsonl:
+            parts.append(reader.json(jsonl))
+        legacy = io.glob_files(io.join("*.parquet"))
+        if legacy:
+            parts.append(reader.parquet(*legacy))
+        if not parts:
+            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     # ------------------------------------------------------------------
     def replay_batch(self, max_concurrent_epochs: int = 1,

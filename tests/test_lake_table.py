@@ -71,6 +71,157 @@ def test_schema_evolution_add_rename_widen(spark, tmpdir_):
     assert t.read().collect()[0]["language"] == "en"
 
 
+def _urls_in_bucket(bucket, n_buckets, k):
+    from tapdata_connectors_spark.functions.xxh import spark_xxhash64
+
+    out, i = [], 0
+    while len(out) < k:
+        u = f"u{i}"
+        i += 1
+        if spark_xxhash64(u, "string") % n_buckets == bucket:
+            out.append(u)
+    return out
+
+
+def _write_layout(spark, t, base_rows=(), delta_rows=()):
+    """Commit base rows (url, views) and delta rows (url, op, seq, views)
+    in the table's CURRENT physical layout; `views` is the current name of
+    the column added by DDL (absent before the ADD)."""
+    import datetime as dt
+
+    from tapdata_connectors_spark.lake.delta import append_delta
+    from tapdata_connectors_spark.operators.dedup import ColumnSpec
+
+    m = t.manifest()
+    extra = [f for f in m.fields if f.name not in dict(FIELDS)]
+    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
+    ddl += "".join(f", {f.name} {f.type}" for f in extra)
+    ts0, ts1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 6, 1)
+    if base_rows:
+        src = spark.createDataFrame(
+            [(u, ts0, None, f"t-{u}", "en", *([v] if extra else [])) for u, v in base_rows],
+            ddl,
+        ).withColumn("_event_seq", F.lit(1).cast("long")) \
+         .withColumn("_deleted", F.lit(False)).withColumn("_mb", t.bucket_expr("url"))
+        t.commit_files(t.write_data_files(src, "_mb"))
+    if delta_rows:
+        payload = [ColumnSpec(f.name, f.type) for f in m.fields if f.name != m.key]
+        df = spark.createDataFrame(
+            [(u, ts1, None, f"d-{u}", "de", *([v] if extra else []), op, seq)
+             for u, op, seq, v in delta_rows],
+            ddl + ", _final_op string, _final_seq bigint",
+        )
+        is_insert = F.col("_final_op") == "I"
+        df = df.select(
+            "*", F.col("warc_ts").alias("_final_ts"),
+            F.lit(None).cast("bigint").alias("_del_seq"),
+            F.lit(None).cast("timestamp").alias("_del_ts"),
+            t.bucket_expr("url").alias("_mb"),
+            # an insert sets every column, an update only the added one
+            *[(is_insert | F.lit(c.name not in dict(FIELDS))).alias(f"__set_{c.name}")
+              for c in payload],
+        )
+        append_delta(t, df, payload)
+
+
+def test_reads_span_add_default_rename_widen_layouts(spark, tmpdir_):
+    # files written across ADD (with default), RENAME and WIDEN int->bigint
+    # read back through the physical schema each manifest entry records:
+    # bucket 0 holds base files only, bucket 1 the same layouts plus
+    # pending deltas (one per layout, including a pre-ADD insert)
+    t = make(spark, tmpdir_, n_buckets=2)
+    a, b = _urls_in_bucket(0, 2, 4), _urls_in_bucket(1, 2, 5)
+    big = 2**40
+    _write_layout(spark, t, [(a[0], None), (b[0], None)],
+                  [(b[4], "I", 10, None)])
+    t.add_column("views", "int", default="7")
+    _write_layout(spark, t, [(a[1], 5), (b[1], 5)], [(b[0], "U", 11, 11)])
+    t.rename_column("views", "view_count")
+    _write_layout(spark, t, [(a[2], 6), (b[2], 6)], [(b[1], "U", 12, 12)])
+    t.widen_column("view_count", "bigint")
+    _write_layout(spark, t, [(a[3], big), (b[3], big)], [(b[2], "U", 13, 2 * big)])
+    assert t.delta_file_counts() == {1: 4}
+
+    views = {a[0]: 7, a[1]: 5, a[2]: 6, a[3]: big,
+             b[0]: 11, b[1]: 12, b[2]: 2 * big, b[3]: big, b[4]: 7}
+    expect = {u: (v, f"d-{u}" if u == b[4] else f"t-{u}") for u, v in views.items()}
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs0 = set(tracker.getJobIdsForGroup(None))
+    df = t.read()  # plan only: the scans must not infer a schema
+    assert set(tracker.getJobIdsForGroup(None)) == jobs0
+    assert df.schema["view_count"].dataType.simpleString() == "bigint"
+
+    def state(frame):
+        return {r["url"]: (r["view_count"], r["text"]) for r in frame.collect()}
+
+    assert state(df) == expect
+    for bucket, urls in ((0, a), (1, b)):
+        assert state(t.read_raw(buckets=[bucket])) == {u: expect[u] for u in urls}
+    t.compact()
+    assert not t.delta_file_counts()
+    assert state(t.read()) == expect
+
+
+def test_reads_entries_that_record_declared_types(spark, tmpdir_, monkeypatch):
+    # entries written by earlier versions carry no `types_written` stamp
+    # and record each column's DECLARED type: append_delta declared every
+    # derived column "string", though simhash is written bigint and
+    # minhash_sig array<bigint>. Such a table must still read, resolve its
+    # pending deltas and compact.
+    from tapdata_connectors_spark.operators import corpus
+    from tapdata_connectors_spark.sources.generator import (
+        GeneratorConfig, generate_events, stage_events)
+    from tapdata_connectors_spark.streaming.driver import CdcPipeline
+    from tests.helpers import assert_state_equal, oracle_replay
+
+    derived = ("simhash", "minhash_sig")
+    real_write = LakeTable.write_data_files
+
+    def write_declared(self, df, bucket_col, kind="base", **kw):
+        entries = real_write(self, df, bucket_col, kind=kind, **kw)
+        declared = {str(f.id): "string" if kind == "delta" and f.name in derived
+                    else f.type for f in self.manifest().fields}
+        declared.update({"-1": "bigint", "-2": "boolean"})
+        for e in entries:
+            e.pop("types_written", None)
+            e["types"] = {i: declared[i] for i in e["columns"] if i in declared}
+        return entries
+
+    cfg = GeneratorConfig(n_events=600, n_urls=80, epoch_size=200,
+                          p_update=0.4, p_delete=0.1)
+    ev = generate_events(spark, cfg)
+    stage_events(ev, f"{tmpdir_}/staging")
+    pipe = CdcPipeline(spark, f"{tmpdir_}/pages", f"{tmpdir_}/staging",
+                       n_buckets=4, merge_mode="mor", enrich=list(derived))
+    monkeypatch.setattr(LakeTable, "write_data_files", write_declared)
+    pipe.replay_batch()
+    monkeypatch.undo()
+    t = pipe.table
+    ids = {str(f.id) for f in t.manifest().fields if f.name in derived}
+    deltas = [e for e in t.manifest().files if e.get("kind") == "delta"]
+    assert deltas and all(e["types"][i] == "string" for e in deltas for i in ids)
+
+    oracle = oracle_replay(ev.collect())
+
+    def check(frame):
+        assert_state_equal(frame.drop(*derived), oracle)
+        bad = frame.filter(
+            (F.col("simhash") != corpus.simhash_col(F.col("text")))
+            | (F.col("minhash_sig") != corpus.minhash_sig_col(F.col("text")))
+            | (F.col("text").isNotNull() & F.col("simhash").isNull())
+        ).count()
+        assert bad == 0
+        assert frame.filter(F.col("minhash_sig").isNotNull()).count() > 0
+
+    check(t.read())
+    url = oracle.final_rows()[0]["url"]
+    assert [r["url"] for r in t.lookup(url).collect()] == [url]
+    t.compact()
+    assert not t.delta_file_counts()
+    check(t.read())
+
+
 def test_time_travel(spark, tmpdir_):
     t = make(spark, tmpdir_)
     v0 = t.current_version()

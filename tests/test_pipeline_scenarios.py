@@ -295,3 +295,198 @@ def test_ddl_add_column_with_specs(spark, tmpdir_):
     assert df.filter("views = 7").count() > 0
     f = [f for f in pipe.table.manifest().fields if f.name == "views"][0]
     assert f.default == "7" and f.comment == "page view counter"
+
+
+def _read_epoch(spark, staging, e):
+    from tapdata_connectors_spark.schema import EVENTS_SCHEMA
+
+    return spark.read.schema(EVENTS_SCHEMA).parquet(f"{staging}/epoch={e}")
+
+
+def test_ddl_head_barriers_skip_empty_slices(spark, tmpdir_, monkeypatch):
+    # ADD and RENAME back to back at the head of epoch 1: of its three
+    # slices, (-inf, 300) and (300, 301) hold no DML event and must cost
+    # no fold; the events at the barrier seqs belong to no slice
+    from tapdata_connectors_spark.streaming import driver
+
+    cfg = GeneratorConfig(
+        n_events=600, n_urls=60, epoch_size=300,
+        ddl=(
+            DdlSpec(seq=300, kind="ADD_COLUMN", column="views", new_type="int"),
+            DdlSpec(seq=301, kind="RENAME_COLUMN", column="views", new_name="view_count"),
+        ),
+        extras_cols=(("views", 300, "int"), ("view_count", 301, "int")),
+    )
+    ev = generate_events(spark, cfg)
+    stage_events(ev, f"{tmpdir_}/staging")
+    pipe = CdcPipeline(spark, f"{tmpdir_}/pages", f"{tmpdir_}/staging", n_buckets=4)
+    folds = []
+    real_fold = driver.lww_fold
+
+    def spy(*a, **kw):
+        folds.append(1)
+        return real_fold(*a, **kw)
+
+    monkeypatch.setattr(driver, "lww_fold", spy)
+    pipe.apply_epoch(_read_epoch(spark, f"{tmpdir_}/staging", 0), 0)
+    n0 = len(folds)
+    out = pipe.apply_epoch(_read_epoch(spark, f"{tmpdir_}/staging", 1), 1)
+
+    assert len(folds) - n0 == 1
+    assert [m["epoch_key"] for m in out] == ["e1:s0", "e1:s1", "e1:s2"]
+    assert out[:2] == [{"skipped": True, "empty": True, "epoch_key": f"e1:s{i}"}
+                       for i in (0, 1)]
+    assert out[2]["n_events"] > 0
+    applied = pipe.table.manifest().applied_epochs
+    assert "e1:s2" in applied and not {"e1:s0", "e1:s1"} & set(applied)
+    assert_state_equal(pipe.table.read(), oracle_replay(ev.collect()))
+
+
+def _expected_lineage(event_rows, n_buckets, stamp):
+    """(stamped epoch, slice, partition) -> [n_events, n_insert, n_update,
+    n_delete, offset_start, offset_end] computed from the staged events.
+    A slice's index is the number of barriers below the event's seq; an
+    event at a barrier's seq is in no slice."""
+    from tapdata_connectors_spark.functions.xxh import spark_xxhash64
+
+    bounds: dict[int, list[int]] = {}
+    for r in event_rows:
+        if r["op"] == "DDL":
+            bounds.setdefault(r["epoch"], []).append(r["event_seq"])
+    out: dict[tuple, list[int]] = {}
+    for r in event_rows:
+        seq, b = r["event_seq"], bounds.get(r["epoch"], [])
+        if r["op"] == "DDL" or seq in b:
+            continue
+        part = spark_xxhash64(r["url"], "string") % n_buckets
+        c = out.setdefault((stamp[r["epoch"]], sum(seq > x for x in b), part),
+                           [0, 0, 0, 0, seq, seq])
+        c[0] += 1
+        c[1 + "IUD".index(r["op"])] += 1
+        c[4], c[5] = min(c[4], seq), max(c[5], seq)
+    return out
+
+
+def test_lineage_flush_runs_no_spark_job(spark, tmpdir_, monkeypatch):
+    from tapdata_connectors_spark.schema import LINEAGE_SCHEMA
+
+    # ADD at the head of epoch 2 (empty first slice), RENAME mid-epoch
+    cfg = GeneratorConfig(
+        n_events=1200, n_urls=100, epoch_size=300, p_update=0.4, p_delete=0.1,
+        ddl=(
+            DdlSpec(seq=600, kind="ADD_COLUMN", column="views", new_type="int"),
+            DdlSpec(seq=750, kind="RENAME_COLUMN", column="views", new_name="view_count"),
+        ),
+        extras_cols=(("views", 600, "int"), ("view_count", 750, "int")),
+    )
+    ev = generate_events(spark, cfg)
+    stage_events(ev, f"{tmpdir_}/staging")
+    rows = ev.collect()
+    tracker = spark.sparkContext.statusTracker()
+    want_cols = [(f.name, f.dataType) for f in LINEAGE_SCHEMA.fields]
+    cols = ["n_events", "n_insert", "n_update", "n_delete",
+            "offset_start", "offset_end"]
+
+    def replay(mode, **kw):
+        pipe = CdcPipeline(spark, f"{tmpdir_}/{mode}", f"{tmpdir_}/staging",
+                           n_buckets=4, merge_mode=mode)
+        launched, real_flush = [], pipe.flush_lineage
+
+        def flush():
+            had_rows = bool(pipe._lineage_rows)
+            before = set(tracker.getJobIdsForGroup(None))
+            real_flush()
+            launched.append((had_rows, set(tracker.getJobIdsForGroup(None)) - before))
+
+        monkeypatch.setattr(pipe, "flush_lineage", flush)
+        pipe.replay_batch(**kw)
+        assert any(had for had, _ in launched)
+        assert all(not jobs for _, jobs in launched)
+        lin = pipe.lineage()
+        assert [(f.name, f.dataType) for f in lin.schema.fields] == want_cols
+        assert_state_equal(pipe.table.read(), oracle_replay(rows))
+        return {(r["epoch"], r["sub_epoch"], r["partition_id"]): [r[c] for c in cols]
+                for r in lin.collect()}
+
+    # COW: one row per (epoch, slice, bucket)
+    got = replay("cow")
+    assert got == _expected_lineage(rows, 4, {e: e for e in range(4)})
+
+    # MOR chunks of 2 DDL-free epochs, stamped with their first member; the
+    # slice-global row (partition -1) carries the counts, bucket rows the
+    # partitions the chunk touched
+    want = _expected_lineage(rows, 4, {0: 0, 1: 0, 2: 2, 3: 3})
+    got = replay("mor", epoch_batch=2)
+    slices = {k[:2] for k in want}
+    assert {k[:2] for k in got} == slices
+    for s in slices:
+        per = [v for k, v in want.items() if k[:2] == s]
+        agg = [sum(v[i] for v in per) for i in range(4)]
+        agg += [min(v[4] for v in per), max(v[5] for v in per)]
+        assert got[(*s, -1)] == agg
+        assert {k[2] for k in got if k[:2] == s and k[2] >= 0} == {
+            k[2] for k in want if k[:2] == s}
+
+
+def test_lineage_keeps_parquet_flushes_of_earlier_versions(spark, tmpdir_, monkeypatch):
+    # earlier versions flushed lineage as parquet through a Spark write; a
+    # pipeline resumed on that directory must return those rows too
+    from tapdata_connectors_spark.schema import LINEAGE_SCHEMA
+
+    cfg = GeneratorConfig(n_events=900, n_urls=100, epoch_size=300,
+                          p_update=0.4, p_delete=0.1)
+    ev = generate_events(spark, cfg)
+    rows = ev.collect()
+    staging = f"{tmpdir_}/staging"
+    stage_events(ev.filter("epoch < 2"), staging)
+    old = CdcPipeline(spark, f"{tmpdir_}/pages", staging, n_buckets=4)
+
+    def parquet_flush():
+        buffered, old._lineage_rows = old._lineage_rows, []
+        if buffered:
+            (spark.createDataFrame(buffered, LINEAGE_SCHEMA).coalesce(1)
+             .write.mode("append").parquet(old.lineage_path))
+
+    monkeypatch.setattr(old, "flush_lineage", parquet_flush)
+    old.replay_batch()
+    stage_events(ev.filter("epoch >= 2"), staging, mode="append")
+    pipe = CdcPipeline(spark, f"{tmpdir_}/pages", staging, n_buckets=4)
+    pipe.replay_batch()
+
+    import glob
+    assert glob.glob(f"{pipe.lineage_path}/*.parquet")
+    assert glob.glob(f"{pipe.lineage_path}/*.jsonl")
+    cols = ["n_events", "n_insert", "n_update", "n_delete",
+            "offset_start", "offset_end"]
+    lin = pipe.lineage()
+    assert [(f.name, f.dataType) for f in lin.schema.fields] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA.fields]
+    got = {(r["epoch"], r["sub_epoch"], r["partition_id"]): [r[c] for c in cols]
+           for r in lin.collect()}
+    assert got == _expected_lineage(rows, 4, {e: e for e in range(3)})
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_ddl_mid_epoch_gap_slice_is_empty(spark, tmpdir_, mode):
+    # ADD and RENAME mid-epoch with a seq gap between them that holds no
+    # DML event: the seq range cannot prove the middle slice empty, so it
+    # is folded, and the empty fold still yields the empty-slice entry
+    cfg = GeneratorConfig(
+        n_events=600, n_urls=60, epoch_size=300,
+        ddl=(
+            DdlSpec(seq=350, kind="ADD_COLUMN", column="views", new_type="int"),
+            DdlSpec(seq=360, kind="RENAME_COLUMN", column="views", new_name="view_count"),
+        ),
+        extras_cols=(("views", 350, "int"), ("view_count", 360, "int")),
+    )
+    ev = generate_events(spark, cfg).filter("op = 'DDL' OR event_seq NOT BETWEEN 351 AND 359")
+    stage_events(ev, f"{tmpdir_}/staging")
+    pipe = CdcPipeline(spark, f"{tmpdir_}/pages", f"{tmpdir_}/staging",
+                       n_buckets=4, merge_mode=mode)
+    pipe.apply_epoch(_read_epoch(spark, f"{tmpdir_}/staging", 0), 0)
+    out = pipe.apply_epoch(_read_epoch(spark, f"{tmpdir_}/staging", 1), 1)
+
+    assert [m["epoch_key"] for m in out] == ["e1:s0", "e1:s1", "e1:s2"]
+    assert out[1] == {"skipped": True, "empty": True, "epoch_key": "e1:s1"}
+    assert out[0]["n_events"] > 0 and out[2]["n_events"] > 0
+    assert_state_equal(pipe.table.read(), oracle_replay(ev.collect()))
